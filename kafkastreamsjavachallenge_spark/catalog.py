@@ -70,18 +70,31 @@ def _maybe_relayout(spark: SparkSession, path: str, name: str, df: DataFrame) ->
     return spark.read.parquet(out)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table; normalizes the events timestamp to TimestampType.
+def normalize_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+    """The one reading of a physical event-time column as TimestampType.
 
     events.ts has shipped in two physical forms across testdata
     generations: parquet TIMESTAMP(NANOS) read as long nanos (see
     session._RUNTIME_CONFS nanosAsLong; convert with integer division so
     the truncation to microseconds matches DuckDB's read of the same
     file) and TIMESTAMP(MICROS) without a UTC annotation, which Spark 4
-    reads as TIMESTAMP_NTZ.  Both normalize to TimestampType here: the
-    session timezone is pinned UTC (configure_runtime), so the NTZ cast
-    is value-preserving vs the oracle's naive read, and downstream
+    reads as TIMESTAMP_NTZ.  Both normalize to TimestampType: the session
+    timezone is pinned UTC (configure_runtime), so the NTZ cast is
+    value-preserving vs the oracle's naive read, and downstream
     event-time code (withWatermark, unix_micros) requires TimestampType.
+    Works on batch and streaming frames alike; other types pass through.
+    """
+    ts_type = dict(df.dtypes).get(ts_col)
+    if ts_type == "bigint":
+        return df.withColumn(ts_col, F.expr(f"timestamp_micros(`{ts_col}` div 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one table; events.ts goes through ``normalize_event_time``.
+
     Large single-row-group inputs are transparently re-laid-out once per
     process (see _maybe_relayout).
     """
@@ -89,11 +102,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
     if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_event_time(df)
     return _maybe_relayout(spark, path, name, df)
 
 

@@ -22,22 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to TimestampType.
-
-    Replaces the reference's key-based timestamp extractor
-    (LogFrameTimestampExtractor.java:8-14): we take event time from the
-    payload column and *drop* malformed rows instead of mapping them to
-    epoch 0 (SURVEY.md §1.3.3 quirk fix).
-    """
-    dt = dict(df.dtypes)[ts_col]
-    if dt == "bigint":  # unix seconds or nanos are handled by the catalog
-        df = df.withColumn(ts_col, F.timestamp_seconds(F.col(ts_col)))
-    elif dt == "string":
-        df = df.withColumn(ts_col, F.to_timestamp(F.col(ts_col)))
-    return df.filter(F.col(ts_col).isNotNull())
-
-
 def tumbling(df: DataFrame, ts_col: str, duration: str) -> DataFrame:
     """Assign non-overlapping event-time windows (W1).
 

@@ -52,9 +52,10 @@ def q_null_filter(spark, sf_dir):
     return df.filter(F.col("et").isNotNull()).select("event_id", "et")
 
 
-# T1 — event-time extraction (LogFrameTimestampExtractor.java:8-14)
+# T1 — event-time extraction (LogFrameTimestampExtractor.java:8-14); the
+# physical ts type is normalized once, by catalog.normalize_event_time
 def q_event_time(spark, sf_dir):
-    df = W.with_event_time(_events(spark, sf_dir), "ts")
+    df = _events(spark, sf_dir)
     sec = F.unix_timestamp("ts")
     return df.select(
         "event_id",

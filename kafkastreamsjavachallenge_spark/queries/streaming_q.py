@@ -17,190 +17,82 @@ tests/test_streaming.py.
 
 from __future__ import annotations
 
-from kafkastreamsjavachallenge_spark.catalog import load_table
+import contextlib
+import os
+import shutil
+import tempfile
+
+from pyspark.sql import functions as F
+
+from kafkastreamsjavachallenge_spark.catalog import load_table, normalize_event_time
 from kafkastreamsjavachallenge_spark.queries.corpus import _KS_SQL
 from kafkastreamsjavachallenge_spark.queries.llm import _MINHASH_SIG_CTE
 from kafkastreamsjavachallenge_spark.queries.quality import (
     _CMS_HASHES,
     _CMS_W,
     _P,
+    _bucket,
 )
+from kafkastreamsjavachallenge_spark.session import configure_runtime
 from kafkastreamsjavachallenge_spark.streaming.pipeline import (
     file_stream,
     run_to_memory,
     stream_static_enrich,
+    stream_stream_join,
     streaming_session_counts,
     streaming_sliding_counts,
     streaming_unique_users,
 )
 
 
-def _user_root(name: str) -> str:
-    """Per-user cache root under the temp dir (round-8 ADVICE): the uid
-    suffix keeps users from colliding on one world-predictable path, and
-    the ownership check refuses a root pre-created by ANOTHER user — a
-    poisoned ``_READY`` dir there would otherwise be served silently as
-    stream input, and a foreign 0700 dir would surface as a confusing
-    EACCES instead of this explicit error."""
-    import os
-    import tempfile
+def _table_stream(spark, sf_dir, table):
+    """``<table>.parquet`` read in place as a file micro-batch stream.
 
-    root = os.path.join(tempfile.gettempdir(), f"{name}_{os.getuid()}")
-    os.makedirs(root, mode=0o700, exist_ok=True)
-    st = os.stat(root)
-    if st.st_uid != os.getuid():
-        raise RuntimeError(
-            f"cache root {root} is owned by uid {st.st_uid}, not "
-            f"{os.getuid()} — refusing to trust its contents"
-        )
-    return root
-
-
-def _staged_dir(src: str, variant: str = "plain", build=None, link_src: bool = True) -> str:
-    """Deterministic per-(source, variant) staging directory for the file
-    stream source (it requires a DIRECTORY; testdata is read-only, so the
-    plain variant holds one symlink — no data is copied).  The path is
-    derived from the source realpath, so repeated bench/driver-loop
-    invocations REUSE one dir per source instead of leaking a fresh
-    ``mkdtemp`` each call (round-7 ADVICE).  Built under a dot-prefixed
-    tmp and published with an atomic rename after a ``_READY`` marker
-    lands, so concurrent callers either win the rename or reuse the
-    winner's complete dir — never read a half-built one.  ``build(tmp)``
-    lets callers add derived files (the horizon sentinel) before
-    publication.
-
-    Layout is TWO-level — ``<root>/<sha1(src|variant)[:8]>/<sha1(size|
-    mtime)[:8]>`` — so a source's identity generations are siblings: test
-    tables are REGENERATED at the same path between driver rounds, and a
-    stale generation would otherwise keep serving a sentinel derived
-    from the old data (whose event time may sit below the new corpus
-    horizon, silently breaking append-mode suppression).  On publish,
-    SUPERSEDED sibling generations are swept (round-8 ADVICE: the split3
-    variant writes full parquet copies, so un-GC'd generations were an
-    unbounded data-copy leak across driver rounds)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    st = os.stat(src)
-    src_key = hashlib.sha1(f"{src}|{variant}".encode()).hexdigest()[:8]
-    ident = hashlib.sha1(f"{st.st_size}|{st.st_mtime_ns}".encode()).hexdigest()[:8]
-    srcdir = os.path.join(_user_root("ksjc_stage"), src_key)
-    final = os.path.join(srcdir, ident)
-    if os.path.exists(os.path.join(final, "_READY")):
-        if os.stat(final).st_uid != os.getuid():  # foreign publish
-            raise RuntimeError(f"staged dir {final} owned by another uid")
-        return final
-    os.makedirs(srcdir, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=f".{ident}.", dir=srcdir)
-    try:
-        if link_src:
-            os.symlink(src, os.path.join(tmp, "part-00000.parquet"))
-        if build is not None:
-            build(tmp)
-        with open(os.path.join(tmp, "_READY"), "w"):
-            pass
-        os.rename(tmp, final)
-    except OSError:
-        # either the publish race was lost (another caller renamed
-        # first) or something real failed — in both cases drop our
-        # staging dir so failed builds never accrete under /tmp, then
-        # require a complete published dir to exist before returning
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final, "_READY")):
-            raise
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)  # build() blew up
-        raise
-    _sweep_superseded(srcdir, keep=ident)
-    return final
-
-
-def _sweep_superseded(srcdir: str, keep: str) -> None:
-    """Remove sibling generations of ``srcdir`` other than ``keep``: the
-    source was regenerated, so prior (size, mtime) identities can never
-    be requested again.  Dot-prefixed in-flight build dirs are left for
-    their owners except stale ones (mtime > 1 h — a crashed build)."""
-    import os
-    import shutil
-    import time as _time
-
-    try:
-        entries = os.listdir(srcdir)
-    except OSError:
-        return
-    for d in entries:
-        p = os.path.join(srcdir, d)
-        if d == keep:
-            continue
-        if d.startswith("."):
-            try:
-                stale = _time.time() - os.path.getmtime(p) > 3600
-            except OSError:
-                continue
-            if not stale:
-                continue
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _staged_docs_stream(spark, sf_dir):
-    """documents.parquet as a file micro-batch stream via the shared
-    deterministic staging dir."""
-    import os
-
-    from kafkastreamsjavachallenge_spark.session import configure_runtime
-
-    configure_runtime(spark)
-    src = os.path.realpath(f"{sf_dir}/documents.parquet")
-    stage = _staged_dir(src)
-    schema = spark.read.parquet(src).schema
-    return file_stream(spark, stage, schema)
-
-
-def _event_stream(spark, sf_dir, horizon_sentinel=False):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kafkastreamsjavachallenge_spark.session import configure_runtime
-
+    The file source needs a directory (a bare file path fails with "basePath
+    must be a directory"), so the stream reads the file's own directory and
+    keeps only the table's file via ``pathGlobFilter`` — nothing is copied,
+    linked or left behind."""
     configure_runtime(spark)  # nanosAsLong etc. — vanilla driver sessions
-    src = os.path.realpath(f"{sf_dir}/events.parquet")
+    src = os.path.realpath(f"{sf_dir}/{table}.parquet")
+    schema = spark.read.parquet(src).schema
+    folder, name = os.path.split(src)
+    return spark.readStream.schema(schema).option("pathGlobFilter", name).parquet(folder)
 
-    batch = spark.read.parquet(src)  # schema donor
-    if horizon_sentinel:
-        # One extra event 10 minutes past the corpus max event time:
-        # after the availableNow batch the watermark lands beyond every
-        # real window, so append mode's no-data flush emits all real
-        # final counts; the sentinel's OWN window never closes and is
-        # suppressed — which is exactly the emit-on-close semantics
-        # under test.  Derived from the latest real row so its schema
-        # (incl. nanos-as-bigint drift) matches the source bit-for-bit.
-        def _write_sentinel(tmp_dir: str) -> None:
-            last = batch.orderBy(F.desc("ts")).limit(1)
-            if dict(batch.dtypes).get("ts") == "bigint":  # nanos drift
-                sent = last.withColumn("ts", F.col("ts") + F.lit(600_000_000_000))
-            else:
-                sent = last.withColumn(
-                    "ts", F.col("ts") + F.expr("INTERVAL 10 MINUTES")
-                )
-            sent.coalesce(1).write.mode("append").parquet(tmp_dir)
 
-        stage = _staged_dir(src, "sentinel", build=_write_sentinel)
-    else:
-        stage = _staged_dir(src)
-    stream = file_stream(spark, stage, batch.schema)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import ensure_event_time
+def _event_stream(spark, sf_dir):
+    return normalize_event_time(_table_stream(spark, sf_dir, "events"))
 
-    return ensure_event_time(stream, "ts")
+
+@contextlib.contextmanager
+def _event_stream_with_horizon(spark, sf_dir):
+    """The events stream unioned with a second file stream holding one
+    sentinel event 10 minutes past the corpus max event time: after the
+    availableNow batch the watermark lands beyond every real window, so
+    append mode's no-data flush emits all real final counts; the
+    sentinel's OWN window never closes and is suppressed — which is
+    exactly the emit-on-close semantics under test.  The sentinel is built
+    from normalized events, so it needs no per-drift branch; its directory
+    is removed on exit, after the caller's drain."""
+    stream = _event_stream(spark, sf_dir)  # applies the runtime confs first
+    folder = tempfile.mkdtemp(prefix="horizon_sentinel_")
+    try:
+        events = normalize_event_time(spark.read.parquet(f"{sf_dir}/events.parquet"))
+        (
+            events.orderBy(F.desc("ts"))
+            .limit(1)
+            .withColumn("ts", F.col("ts") + F.expr("INTERVAL 10 MINUTES"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(folder)
+        )
+        yield stream.unionByName(spark.readStream.schema(events.schema).parquet(folder))
+    finally:
+        shutil.rmtree(folder, ignore_errors=True)
 
 
 def q_stream_unique_users(spark, sf_dir):
     result = streaming_unique_users(_event_stream(spark, sf_dir))
-    return run_to_memory(result, output_mode="update", state_partitions=8)
+    return run_to_memory(result, output_mode="update")
 
 
 def q_stream_unique_users_append(spark, sf_dir):
@@ -210,17 +102,14 @@ def q_stream_unique_users_append(spark, sf_dir):
     watermark (sentinel_ts - 1min) is always below that window's end —
     and the oracle reads only the real events.parquet, so both sides
     exclude it by construction."""
-    stream = _event_stream(spark, sf_dir, horizon_sentinel=True)
-    result = streaming_unique_users(stream)
-    return run_to_memory(result, output_mode="append", state_partitions=8)
+    with _event_stream_with_horizon(spark, sf_dir) as stream:
+        return run_to_memory(streaming_unique_users(stream), output_mode="append")
 
 
 def q_stream_enrich(spark, sf_dir):
     """Stream-static enrichment: events stream × broadcast customer dim,
     aggregated per market segment.  One availableNow batch drains the whole
     source, so the result equals the batch join → full SQL oracle."""
-    from pyspark.sql import functions as F
-
     stream = _event_stream(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -229,14 +118,14 @@ def q_stream_enrich(spark, sf_dir):
     result = enriched.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    return run_to_memory(result, output_mode="complete", state_partitions=8)
+    return run_to_memory(result, output_mode="complete")
 
 
 def q_stream_sliding(spark, sf_dir):
     """Sliding-window streaming counts; final counts after one availableNow
     drain equal the batch sliding-window query → full SQL oracle."""
     result = streaming_sliding_counts(_event_stream(spark, sf_dir))
-    return run_to_memory(result, output_mode="update", state_partitions=8)
+    return run_to_memory(result, output_mode="update")
 
 
 def q_stream_session(spark, sf_dir):
@@ -244,7 +133,7 @@ def q_stream_session(spark, sf_dir):
     fragments, so final sessions equal the batch gap-session SQL."""
     result = streaming_session_counts(_event_stream(spark, sf_dir))
     # session-window streaming aggregation supports append/complete only
-    return run_to_memory(result, output_mode="complete", state_partitions=8)
+    return run_to_memory(result, output_mode="complete")
 
 
 def q_stream_countmin(spark, sf_dir):
@@ -255,14 +144,6 @@ def q_stream_countmin(spark, sf_dir):
     why CMS is the canonical heavy-hitter structure for streams.  One
     availableNow drain equals the batch build, so the populated sketch
     cells get a full SQL oracle."""
-    from pyspark.sql import functions as F
-
-    from kafkastreamsjavachallenge_spark.queries.quality import (
-        _CMS_HASHES,
-        _CMS_W,
-        _bucket,
-    )
-
     stream = _event_stream(spark, sf_dir)
     hashes = F.array(
         *[
@@ -278,7 +159,7 @@ def q_stream_countmin(spark, sf_dir):
         .groupBy(F.col("h.d").alias("d"), F.col("h.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return run_to_memory(cms, output_mode="complete", state_partitions=8)
+    return run_to_memory(cms, output_mode="complete")
 
 
 def q_stream_join(spark, sf_dir):
@@ -288,15 +169,6 @@ def q_stream_join(spark, sf_dir):
     failure mode the reference documents at README.md:196 cannot occur).
     One availableNow batch holds all input, so every inner match is emitted
     before shutdown → equals the batch self-join → full SQL oracle."""
-    from pyspark.sql import functions as F
-
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import (
-        run_to_memory as _run,
-    )
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import (
-        stream_stream_join,
-    )
-
     left = _event_stream(spark, sf_dir).select("event_id", "user_id", "ts")
     right = _event_stream(spark, sf_dir).select(
         F.col("event_id").alias("r_event_id"),
@@ -312,7 +184,7 @@ def q_stream_join(spark, sf_dir):
         left, right, on, left_ts="ts", right_ts="r_ts",
         watermark="1 minute", interval="1 minute",
     )
-    pairs = _run(joined, output_mode="append", state_partitions=8)
+    pairs = run_to_memory(joined, output_mode="append")
     return pairs.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
@@ -323,11 +195,9 @@ def q_stream_topk(spark, sf_dir):
     sketch — use this below memory limits, the sketch above them.  One
     availableNow drain equals the batch count → full SQL oracle; ties
     break on user_id so the limit is deterministic in both engines."""
-    from pyspark.sql import functions as F
-
     stream = _event_stream(spark, sf_dir)
     counts = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    out = run_to_memory(counts, output_mode="complete", state_partitions=8)
+    out = run_to_memory(counts, output_mode="complete")
     return out.orderBy(F.col("n").desc(), "user_id").limit(10)
 
 
@@ -344,7 +214,7 @@ def q_stream_dedup(spark, sf_dir):
     deduped = stream.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["user_id"]
     )
-    out = run_to_memory(deduped, output_mode="append", state_partitions=8)
+    out = run_to_memory(deduped, output_mode="append")
     return out.select("user_id")
 
 
@@ -358,12 +228,10 @@ def q_stream_curation(spark, sf_dir):
     dropDuplicates into a stateful aggregation — the canonical
     ingest-side curation topology.  This harness run keeps dedup state
     unbounded (one availableNow batch); a production stream bounds it
-    with dropDuplicatesWithinWatermark (streaming/stateful.py)."""
-    from pyspark.sql import functions as F
-
+    with dropDuplicatesWithinWatermark, as q_stream_dedup does."""
     from kafkastreamsjavachallenge_spark.functions import text as T
 
-    stream = _staged_docs_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
 
     toks = T.tokens("text")
     n = F.size(toks)
@@ -378,7 +246,7 @@ def q_stream_curation(spark, sf_dir):
     counts = deduped.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_kept_distinct")
     )
-    return run_to_memory(counts, output_mode="update", state_partitions=8)
+    return run_to_memory(counts, output_mode="update")
 
 
 def q_stream_neardup(spark, sf_dir):
@@ -399,12 +267,10 @@ def q_stream_neardup(spark, sf_dir):
     availableNow drain therefore equals the batch banding — full SQL
     oracle.  At scale, state is |occupied buckets| within the retention
     horizon; production bounds it with watermarked window buckets."""
-    from pyspark.sql import functions as F
-
     from kafkastreamsjavachallenge_spark.functions import text as T
     from kafkastreamsjavachallenge_spark.operators import dedup as D
 
-    stream = _staged_docs_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
 
     sigs = stream.filter(F.size(T.tokens("text")) >= 3).select(
         "doc_id",
@@ -416,7 +282,7 @@ def q_stream_neardup(spark, sf_dir):
     per_bucket = banded.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id")
     )
-    out = run_to_memory(per_bucket, output_mode="complete", state_partitions=8)
+    out = run_to_memory(per_bucket, output_mode="complete")
     return out.filter(F.col("n_docs") >= 2)
 
 
@@ -428,15 +294,11 @@ def q_stream_anomaly(spark, sf_dir):
     z-score pass runs over the drained counts exactly as the batch
     monitor would over its counts table.  One availableNow drain equals
     the batch aggregate, so the full anomaly report is oracle-checked."""
-    from pyspark.sql import functions as F
-
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import run_to_memory
-
     stream = _event_stream(spark, sf_dir)
     daily = stream.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
-    counts = run_to_memory(daily, output_mode="complete", state_partitions=8)
+    counts = run_to_memory(daily, output_mode="complete")
     # per-type moments as window aggregates (no self-join of the memory
     # sink view — same exprIds on both sides trip conflicting-reference
     # analysis; the window also saves the join outright)
@@ -476,14 +338,12 @@ def q_stream_ks(spark, sf_dir):
     Scale: the streaming state is |sources| x |distinct lengths| counter
     cells — domain-bounded, never per-document; the grid pass is the
     same tiny post-aggregate as the batch monitor's."""
-    from pyspark.sql import functions as F
-
-    stream = _staged_docs_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
 
     hist = stream.groupBy("source", "n_chars").agg(
         F.count(F.lit(1)).alias("c_s")
     )
-    counts = run_to_memory(hist, output_mode="complete", state_partitions=8)
+    counts = run_to_memory(hist, output_mode="complete")
     # per-CALL unique view name (round-8 ADVICE): a per-sf_dir name let
     # two concurrent invocations on the same sf_dir race on
     # createOrReplaceTempView and read each other's drained counts
@@ -527,16 +387,14 @@ def q_stream_anomaly_sliding(spark, sf_dir):
     once); the z-score pass is a per-type window over the tiny emitted
     counts table."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    stream = _event_stream(spark, sf_dir, horizon_sentinel=True)
-    win = (
-        stream.withWatermark("ts", "2 minutes")
-        .groupBy("event_type", F.window("ts", "2 minutes", "1 minute").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("event_type", F.col("w.start").alias("window_start"), "n")
-    )
-    counts = run_to_memory(win, output_mode="append", state_partitions=8)
+    with _event_stream_with_horizon(spark, sf_dir) as stream:
+        win = (
+            stream.withWatermark("ts", "2 minutes")
+            .groupBy("event_type", F.window("ts", "2 minutes", "1 minute").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select("event_type", F.col("w.start").alias("window_start"), "n")
+        )
+        counts = run_to_memory(win, output_mode="append")
     w = Window.partitionBy("event_type")
     k = F.count(F.lit(1)).over(w)
     s = F.sum("n").over(w)
@@ -569,11 +427,9 @@ def q_stream_funnel(spark, sf_dir):
     q_stream_curation, whose dropDuplicates->agg chain owns content
     state.  One availableNow drain equals the batch funnel's first three
     stages row-for-row."""
-    from pyspark.sql import functions as F
-
     from kafkastreamsjavachallenge_spark.functions import text as T
 
-    stream = _staged_docs_stream(spark, sf_dir)
+    stream = _table_stream(spark, sf_dir, "documents")
 
     toks = T.tokens("text")
     n = F.size(toks)
@@ -611,7 +467,7 @@ def q_stream_funnel(spark, sf_dir):
             F.when(F.col("f1") & F.col("f2") & F.col("f3"), 1).otherwise(0)
         ).alias("n3"),
     )
-    out = run_to_memory(agg, output_mode="complete", state_partitions=8)
+    out = run_to_memory(agg, output_mode="complete")
     return out.selectExpr(
         "stack(3, 'length', 1, n0, n1, 'diversity', 2, n1, n2, "
         "'top_token', 3, n2, n3) AS (stage, stage_idx, n_in, n_out)"
@@ -637,30 +493,26 @@ def q_stream_rollup(spark, sf_dir):
     watermark, so it is suppressed upstream of the rollup.  One
     availableNow drain equals the batch double-grouping → full SQL
     oracle."""
-    from pyspark.sql import functions as F
-
-    stream = _event_stream(spark, sf_dir, horizon_sentinel=True)
-    per_min = (
-        stream.withWatermark("ts", "1 minute")
-        .groupBy(F.window("ts", "1 minute").alias("window"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    rolled = per_min.groupBy(
-        F.window(F.col("window"), "5 minutes").alias("w5")
-    ).agg(
-        F.sum("n").alias("n_events"),
-        F.count(F.lit(1)).alias("n_minutes"),
-    )
-    out = run_to_memory(
-        rolled.select(
-            F.col("w5.start").alias("window_start"),
-            F.col("n_events"),
-            F.col("n_minutes"),
-        ),
-        output_mode="append",
-        state_partitions=8,
-    )
-    return out
+    with _event_stream_with_horizon(spark, sf_dir) as stream:
+        per_min = (
+            stream.withWatermark("ts", "1 minute")
+            .groupBy(F.window("ts", "1 minute").alias("window"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        rolled = per_min.groupBy(
+            F.window(F.col("window"), "5 minutes").alias("w5")
+        ).agg(
+            F.sum("n").alias("n_events"),
+            F.count(F.lit(1)).alias("n_minutes"),
+        )
+        return run_to_memory(
+            rolled.select(
+                F.col("w5.start").alias("window_start"),
+                F.col("n_events"),
+                F.col("n_minutes"),
+            ),
+            output_mode="append",
+        )
 
 def q_stream_incremental_dedup(spark, sf_dir):
     """The nightly incremental-ingest dedup loop run BY the streaming
@@ -686,78 +538,56 @@ def q_stream_incremental_dedup(spark, sf_dir):
     the index files, not executor memory — the pattern's whole point.
     Each batch is pinned with localCheckpoint before the index append
     so the kept-set is evaluated exactly once (re-evaluating it after
-    the append would see the batch's own bands and self-collide)."""
+    the append would see the batch's own bands and self-collide).
+
+    The 3-way split, band index, kept-id store and checkpoint live in one
+    throwaway directory; the result is materialized before it is removed."""
     import glob
-    import os
-    import shutil
     import time as _time
 
-    from pyspark.sql import functions as F
-
     from kafkastreamsjavachallenge_spark.operators import dedup as D
-    from kafkastreamsjavachallenge_spark.session import configure_runtime
+    from kafkastreamsjavachallenge_spark.streaming.sinks import for_each_batch
 
     configure_runtime(spark)
-    src = os.path.realpath(f"{sf_dir}/documents.parquet")
-
-    def _split(tmp):
-        full = spark.read.parquet(src)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    work = tempfile.mkdtemp(prefix="incremental_dedup_")
+    split, idx, store = (os.path.join(work, d) for d in ("split", "band_index", "kept"))
+    try:
+        os.makedirs(split)
         now = _time.time()
-        for i, nm in enumerate(("a", "b", "c")):
-            sub = os.path.join(tmp, f".w{nm}")
-            (
-                full.filter(F.col("doc_id") % 3 == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(sub)
-            )
-            part = glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-            dst = os.path.join(tmp, f"{nm}.parquet")
-            os.replace(part, dst)
-            shutil.rmtree(sub)
+        for i in range(3):
+            sub = os.path.join(work, f"w{i}")
+            docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(sub)
+            dst = os.path.join(split, f"{i}.parquet")
+            os.replace(glob.glob(os.path.join(sub, "part-*.parquet"))[0], dst)
             # strictly increasing mtimes pin the micro-batch order (the
             # file source processes oldest-first; same-second writes
             # would otherwise tie-break on path only)
             os.utime(dst, (now + i, now + i))
 
-    stage = _staged_dir(src, "split3", build=_split, link_src=False)
-    # work dirs mirror the stage's two-level (source, generation) layout
-    # so regenerated testdata sweeps the prior generation's index/store
-    # alongside its stage dir (round-8 ADVICE: these held O(corpus)
-    # band-index files and would otherwise accrete across driver rounds)
-    wsrc = os.path.join(
-        _user_root("ksjc_work"), os.path.basename(os.path.dirname(stage))
-    )
-    work = os.path.join(wsrc, os.path.basename(stage))
-    shutil.rmtree(work, ignore_errors=True)  # fresh index/store per call
-    os.makedirs(work)
-    _sweep_superseded(wsrc, keep=os.path.basename(stage))
-    idx = os.path.join(work, "band_index")
-    store = os.path.join(work, "kept")
-    schema = spark.read.parquet(src).schema
+        def _handle(bdf, _bid):
+            if os.path.exists(idx):
+                kept = D.dedup_against_band_index(bdf, spark, idx).localCheckpoint(
+                    eager=True
+                )
+                D.write_band_index(kept, idx, mode="append")
+            else:
+                kept = bdf.localCheckpoint(eager=True)
+                D.write_band_index(kept, idx, mode="overwrite")
+            kept.select("doc_id").write.mode("append").parquet(store)
 
-    def _handle(bdf, _bid):
-        if os.path.exists(idx):
-            kept = D.dedup_against_band_index(bdf, spark, idx).localCheckpoint(
-                eager=True
-            )
-            D.write_band_index(kept, idx, mode="append")
-        else:
-            kept = bdf.localCheckpoint(eager=True)
-            D.write_band_index(kept, idx, mode="overwrite")
-        kept.select("doc_id").write.mode("append").parquet(store)
-
-    q = (
-        file_stream(spark, stage, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(_handle)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema("doc_id long").parquet(store).select(
-        "doc_id", (F.col("doc_id") % 3).cast("int").alias("batch")
-    )
+        stream = file_stream(spark, split, docs.schema, max_files_per_trigger=1)
+        for_each_batch(
+            stream, _handle, os.path.join(work, "ckpt"), output_mode="append"
+        ).awaitTermination()
+        return (
+            spark.read.schema("doc_id long")
+            .parquet(store)
+            .select("doc_id", (F.col("doc_id") % 3).cast("int").alias("batch"))
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 _INC_DEDUP_SQL = (

@@ -29,7 +29,6 @@ class EngineConfig:
     app_name: str = "kafkastreamsjavachallenge-spark"
     master: str | None = None  # None -> inherit / local[*]
     shuffle_partitions: int | None = None  # None -> default + AQE coalescing
-    session_timezone: str = "UTC"
     extra: dict = field(default_factory=dict)
 
 
@@ -43,8 +42,8 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Spark 4.1's checksummed checkpoint writer can deadlock awaiting its
-    # checksum future under applyInPandasWithState commits on local FS;
-    # plain checkpoint files are sufficient for a local/posix checkpoint dir.
+    # checksum future under state-store commits on local FS; plain
+    # checkpoint files are sufficient for a local/posix checkpoint dir.
     "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
 }
 
@@ -102,13 +101,8 @@ def build_session(config: EngineConfig | None = None) -> SparkSession:
     b = (
         SparkSession.builder.appName(config.app_name)
         .master(master)
-        .config("spark.sql.session.timeZone", config.session_timezone)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(map=_RUNTIME_CONFS)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
     if config.shuffle_partitions is not None:

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from kafkastreamsjavachallenge_spark.streaming.sinks import _start
+
 LOG_FRAME_SCHEMA = StructType(
     [
         StructField("ts", LongType()),  # unix seconds (README.md:23)
@@ -119,11 +121,11 @@ def write_counts(
         F.unix_timestamp("window_start").cast("string").alias("key"),
         F.col("unique_users").cast("string").alias("value"),
     )
-    return (
+    w = (
         out.writeStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
         .option("topic", topic)
         .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
-        .start()
     )
+    return _start(result.sparkSession, w)

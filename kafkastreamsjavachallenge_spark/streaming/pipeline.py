@@ -19,26 +19,15 @@ WindowStore probe at DeduplicateValueTransformer.java:40-44.
 from __future__ import annotations
 
 import json
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
-    """Normalize an event-time column to TimestampType for watermarking.
-
-    Parquet written without an isAdjustedToUTC annotation reads as
-    TIMESTAMP_NTZ (depending on writer/session), which
-    ``withWatermark`` rejects (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE).
-    The session timezone is pinned to UTC (session.py), so casting
-    NTZ -> TIMESTAMP is value-preserving against the naive-timestamp
-    oracle reading of the same files.
-    """
-    if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
-        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return df
+from kafkastreamsjavachallenge_spark.catalog import normalize_event_time
+from kafkastreamsjavachallenge_spark.streaming.sinks import _start
 
 
 def streaming_unique_users(
@@ -67,7 +56,7 @@ def streaming_unique_users(
     re-admitting same-window duplicates whenever a window outlives the
     watermark lag (observed 2x counts on batch-boundary windows).
     """
-    stream = ensure_event_time(stream, ts_col)
+    stream = normalize_event_time(stream, ts_col)
     w = F.window(F.col(ts_col), duration)
     deduped = (
         stream.withWatermark(ts_col, watermark)
@@ -100,17 +89,14 @@ def stream_static_enrich(
     dim: DataFrame,
     on,
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
-    """Stream-static enrichment join.
+    """Stream-static enrichment join against a broadcast dimension.
 
     The static side is re-read per micro-batch by the engine; broadcasting
     it keeps the stream side shuffle-free — at 100 TB the stream partitions
-    never move, only the (small) dimension ships.  For large dimensions set
-    ``broadcast_dim=False`` and pre-bucket both sides on the join key.
+    never move, only the (small) dimension ships.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on=on, how=how)
+    return stream.join(F.broadcast(dim), on=on, how=how)
 
 
 def stream_stream_join(
@@ -130,8 +116,8 @@ def stream_stream_join(
     can evict state — unbounded stream-stream joins never GC (the same
     failure mode as the reference's broken store retention, README.md:196).
     """
-    lw = ensure_event_time(left, left_ts).withWatermark(left_ts, watermark)
-    rw = ensure_event_time(right, right_ts).withWatermark(right_ts, watermark)
+    lw = normalize_event_time(left, left_ts).withWatermark(left_ts, watermark)
+    rw = normalize_event_time(right, right_ts).withWatermark(right_ts, watermark)
     bound = (
         (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {interval}"))
         & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {interval}"))
@@ -148,7 +134,7 @@ def streaming_sliding_counts(
 ) -> DataFrame:
     """Sliding-window event counts over a stream (beyond the reference's
     tumbling-only surface, SURVEY.md §2.2)."""
-    stream = ensure_event_time(stream, ts_col)
+    stream = normalize_event_time(stream, ts_col)
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), duration, slide).alias("window"))
@@ -168,7 +154,7 @@ def streaming_session_counts(
     SURVEY.md §2.2; reference is tumbling-only).  The engine merges
     adjacent session fragments across micro-batches; watermark bounds the
     merge state."""
-    stream = ensure_event_time(stream, ts_col)
+    stream = normalize_event_time(stream, ts_col)
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.col(key), F.session_window(F.col(ts_col), gap).alias("session"))
@@ -181,7 +167,6 @@ def run_to_memory(
     result: DataFrame,
     output_mode: str = "update",
     query_name: str | None = None,
-    state_partitions: int | str | None = "auto",
     checkpoint: str | None = None,
 ) -> DataFrame:
     """Execute a streaming result with availableNow into a memory sink and
@@ -189,26 +174,13 @@ def run_to_memory(
 
     availableNow processes all currently-available input then stops —
     letting the batch-oriented harness exercise the streaming engine.
-
-    ``state_partitions`` sets the stateful-operator partition count for
-    this query (via the shuffle-partitions conf at plan time, restored
-    after).  A streaming query's state partitioning is pinned by its first
-    checkpoint and every micro-batch pays a fixed per-partition state-store
-    commit cost, so it should track stateful-key cardinality × executor
-    count — NOT inherit whatever relational shuffle setting happens to be
-    live (a vanilla session's 200 means 200 state-store commits per batch
-    even for tiny state).  The default ``"auto"`` uses
-    ``max(8, defaultParallelism)`` — one store per core, the right order
-    on local[N] and on a multi-executor cluster alike.  Pass an int to
-    pin it explicitly, or ``None`` to inherit the live session conf.
+    State partitions follow the one rule of ``streaming/sinks._start``.
 
     ``checkpoint`` overrides the throwaway temp checkpoint dir — pass a
     durable location to resume across runs (production S2 path does the
     same via write_counts' checkpointLocation).
     """
-    table, _q = _drain_to_memory(
-        result, output_mode, query_name, state_partitions, checkpoint
-    )
+    table, _q = _drain_to_memory(result, output_mode, query_name, checkpoint)
     return table
 
 
@@ -216,41 +188,29 @@ def _drain_to_memory(
     result: DataFrame,
     output_mode: str,
     query_name: str | None,
-    state_partitions: int | str | None,
     checkpoint: str | None,
 ):
     """Shared drain core for run_to_memory / run_with_observed: start the
-    availableNow memory-sink query under the state-partition conf, await
-    termination, restore the conf, and delete a THROWAWAY checkpoint
-    (the drain is complete and the memory sink owns the results; durable
-    caller-passed checkpoints are kept).  Returns (sink DataFrame, the
-    terminated StreamingQuery — still readable for recentProgress)."""
-    import shutil
-
+    availableNow memory-sink query, await termination, and delete a
+    THROWAWAY checkpoint (the drain is complete and the memory sink owns
+    the results; durable caller-passed checkpoints are kept).  Returns
+    (sink DataFrame, the terminated StreamingQuery — still readable for
+    recentProgress)."""
     spark = result.sparkSession
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    throwaway = checkpoint is None
     ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
-    conf_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(conf_key)
-    if state_partitions == "auto":
-        state_partitions = max(8, spark.sparkContext.defaultParallelism)
-    if state_partitions is not None:
-        spark.conf.set(conf_key, str(state_partitions))
     try:
-        q = (
+        w = (
             result.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
+        q = _start(spark, w)
         q.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set(conf_key, saved)
-        if throwaway:
+        if checkpoint is None:
             shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name), q
 
@@ -259,7 +219,6 @@ def run_with_observed(
     result: DataFrame,
     metric_name: str,
     output_mode: str = "update",
-    state_partitions: int | str | None = "auto",
 ) -> tuple[DataFrame, list[dict]]:
     """run_to_memory plus the per-micro-batch observed metrics attached
     upstream with ``operators/observe.py with_stream_metrics``.
@@ -268,7 +227,7 @@ def run_with_observed(
     named metrics).  The metrics ride the job — no extra pass over the
     stream, and on a cluster they aggregate across executors exactly like
     any other agg."""
-    table, q = _drain_to_memory(result, output_mode, None, state_partitions, None)
+    table, q = _drain_to_memory(result, output_mode, None, None)
     observed = [
         p["observedMetrics"][metric_name]
         for p in (json.loads(pj) for pj in (pr.json for pr in q.recentProgress))

@@ -1,6 +1,7 @@
 """Streaming sinks beyond the Kafka producer (sources/kafka.py write_counts
-covers S2, UniqueUsersApp.java:133): partquet files, memory (tests), and
-the foreachBatch escape hatch for sinks Spark has no native writer for.
+covers S2, UniqueUsersApp.java:133): parquet files and the foreachBatch
+escape hatch for sinks Spark has no native writer for; the memory drain
+lives in streaming/pipeline.py.  Every sink starts through ``_start``.
 
 Scale notes:
 - The file sink is exactly-once per partition via the sink log; partition
@@ -15,7 +16,27 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+
+def _start(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Start a streaming query with ``max(8, defaultParallelism)`` state
+    partitions — one state store per core.
+
+    A query's state partitioning is pinned by its first checkpoint and
+    every micro-batch pays a fixed per-partition state-store commit, so it
+    must not inherit whatever relational shuffle setting is live (a
+    vanilla session's 200 means 200 commits per batch for tiny state).
+    The query clones its session inside ``start()``, so the conf is
+    restored as soon as ``start()`` returns."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(max(8, spark.sparkContext.defaultParallelism)))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, saved)
 
 
 def to_parquet_files(
@@ -37,7 +58,7 @@ def to_parquet_files(
         w = w.partitionBy(*partition_by)
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(result.sparkSession, w)
 
 
 def for_each_batch(
@@ -55,4 +76,4 @@ def for_each_batch(
     )
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(result.sparkSession, w)

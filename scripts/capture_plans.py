@@ -8,12 +8,17 @@ optimization round commits alongside the code.
 
 Streaming ids are skipped (construction drains a real stream; their
 "plan" is the micro-batch runtime's, not a comparable batch plan).
+
+Each snapshot is normalized before it is written (``normalize_plan``), so
+plan diffs across rounds show only real plan changes.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -23,6 +28,21 @@ from kafkastreamsjavachallenge_spark.session import (  # noqa: E402
     EngineConfig,
     build_session,
 )
+
+# mkdtemp dirs (8 random chars after the prefix) plus the catalog's
+# hash-prefixed relayout copy names: both differ on every run
+_TMP_PATH = re.compile(
+    re.escape(tempfile.gettempdir()) + r"/[\w.-]*?[a-z0-9_]{8}/(?:\d+_)?"
+)
+_EXPR_ID = re.compile(r"#(\d+)")
+
+
+def normalize_plan(txt: str) -> str:
+    """Strip temp-directory paths and renumber expression ids (``#235L``)
+    in order of first appearance."""
+    txt = _TMP_PATH.sub("<tmp>/", txt)
+    ids: dict[str, int] = {}
+    return _EXPR_ID.sub(lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", txt)
 
 
 def main() -> None:
@@ -62,7 +82,7 @@ def main() -> None:
             txt = f"ERROR {type(exc).__name__}: {exc}"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(txt)
+            f.write(normalize_plan(txt))
         print(f"WROTE {path} ({len(txt)} bytes)")
     spark.stop()
 

@@ -44,8 +44,46 @@ def event_files(spark, tmp_path_factory):
     return d, ev
 
 
-def test_multibatch_update_converges_to_batch(spark, event_files):
-    d, ev = event_files
+@pytest.fixture(scope="module")
+def repeat_uid_files(spark, tmp_path_factory):
+    """Three micro-batches in which a uid repeats across batches inside
+    one window (u1 again in window 00:00 must add no count); strictly
+    increasing mtimes keep the batches in event-time order."""
+    import datetime as dt
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path_factory.mktemp("repeat_uid"))
+    base = dt.datetime(2024, 1, 1)
+    batches = [
+        [(0, "u1"), (10, "u2"), (70, "u1")],
+        [(20, "u1"), (30, "u3"), (80, "u1")],
+        [(40, "u4"), (130, "u9")],
+    ]
+    rows = []
+    now = time.time()
+    for i, batch in enumerate(batches):
+        ts = [base + dt.timedelta(seconds=sec) for sec, _ in batch]
+        rows += list(zip(ts, [u for _, u in batch]))
+        path = os.path.join(d, f"b{i}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "ts": pa.array(ts, pa.timestamp("us")),
+                    "user_id": pa.array([u for _, u in batch]),
+                }
+            ),
+            path,
+        )
+        os.utime(path, (now + i, now + i))
+    return d, spark.createDataFrame(rows, "ts TIMESTAMP, user_id STRING")
+
+
+@pytest.mark.parametrize("files", ["event_files", "repeat_uid_files"])
+def test_multibatch_update_converges_to_batch(spark, request, files):
+    d, ev = request.getfixturevalue(files)
     stream = file_stream(spark, d, ev.schema, max_files_per_trigger=1)
     result = streaming_unique_users(stream, "ts", "user_id", "1 minute", "1 minute")
     table = run_to_memory(result, output_mode="update")
@@ -57,7 +95,7 @@ def test_multibatch_update_converges_to_batch(spark, event_files):
         r["window_start"]: r["unique_users"]
         for r in unique_users(ev, "ts", "user_id").collect()
     }
-    assert got == want
+    assert got == want and want
 
 
 def test_multibatch_append_emits_closed_windows_only(spark, event_files):
@@ -81,14 +119,14 @@ def test_multibatch_append_emits_closed_windows_only(spark, event_files):
     assert all(w > max(got) for w in open_windows)
 
 
-def test_auto_state_partitions_ignore_session_shuffle_conf(
+def test_state_store_count_ignores_session_shuffle_conf(
     spark, event_files, tmp_path
 ):
-    """Default 'auto' state sizing: a vanilla session's 200 shuffle
-    partitions must NOT leak into streaming state (200 state-store commits
-    per micro-batch for tiny state).  The checkpoint's state/0/<p> dirs
-    are the physical store count — expect max(8, defaultParallelism) of
-    them, and the session conf restored afterwards."""
+    """State sizing rule: a vanilla session's 200 shuffle partitions must
+    NOT leak into streaming state (200 state-store commits per micro-batch
+    for tiny state).  The checkpoint's state/0/<p> dirs are the physical
+    store count — expect max(8, defaultParallelism) of them, and the
+    session conf restored afterwards."""
     d, ev = event_files
     conf_key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(conf_key)
@@ -104,7 +142,7 @@ def test_auto_state_partitions_ignore_session_shuffle_conf(
         state0 = os.path.join(ckpt, "state", "0")
         parts = [p for p in os.listdir(state0) if p.isdigit()]
         assert len(parts) == expected, (
-            f"state stores {len(parts)} != auto-derived {expected}"
+            f"state stores {len(parts)} != rule-derived {expected}"
         )
     finally:
         spark.conf.set(conf_key, saved)
@@ -405,7 +443,7 @@ def test_stream_curation_dedup_state_spans_batches(spark, tmp_path):
         ["source", "content_hash"]
     )
     counts = deduped.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    got = run_to_memory(counts, output_mode="update", state_partitions=8)
+    got = run_to_memory(counts, output_mode="update")
     # update mode re-emits a source's row only when its count changes;
     # take the max emitted per source = converged value
     final = {
@@ -579,12 +617,10 @@ def test_stream_sliding_anomaly_multibatch_append_finals(spark, event_files):
     the batch sliding expansion, nothing is emitted twice, and the
     un-emitted windows are exactly the open tail the watermark never
     passed."""
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import (
-        ensure_event_time,
-    )
+    from kafkastreamsjavachallenge_spark.catalog import normalize_event_time
 
     d, ev = event_files
-    stream = ensure_event_time(
+    stream = normalize_event_time(
         file_stream(spark, d, ev.schema, max_files_per_trigger=1), "ts"
     )
     win = (
@@ -630,16 +666,14 @@ def test_sliding_window_append_checkpoint_recovery(spark, event_files, tmp_path)
     batch sliding expansion."""
     import time as _t
 
-    from kafkastreamsjavachallenge_spark.streaming.pipeline import (
-        ensure_event_time,
-    )
+    from kafkastreamsjavachallenge_spark.catalog import normalize_event_time
 
     d, ev = event_files
     ckpt = str(tmp_path / "ckpt_sliding")
     emitted: list[tuple] = []
 
     def start():
-        stream = ensure_event_time(
+        stream = normalize_event_time(
             file_stream(spark, d, ev.schema, max_files_per_trigger=1), "ts"
         )
         win = (
@@ -692,55 +726,20 @@ def test_sliding_window_append_checkpoint_recovery(spark, event_files, tmp_path)
     assert all(want[(t, w)] == n for t, w, n in emitted)
 
 
-def test_staged_dir_reuse_failure_and_regeneration(spark, tmp_path):
-    """The deterministic stream-staging cache (round-8 ADVICE fix):
-    (a) same source -> same dir, no new dirs per call; (b) a build()
-    failure cleans its staging dir and leaves nothing half-published;
-    (c) regenerating the source IN PLACE (new size/mtime) publishes a
-    FRESH dir instead of serving the stale cached one — the
-    cross-round testdata-regeneration hazard."""
-    import os
+def test_stream_queries_leave_tempdir_unchanged(spark):
+    """The horizon sentinel and the incremental-dedup work directory are
+    throwaway: calling each query twice leaves no new entry in the temp
+    dir, and both calls return equal results."""
+    import tempfile
 
-    from kafkastreamsjavachallenge_spark.queries.streaming_q import _staged_dir
+    from kafkastreamsjavachallenge_spark.queries.streaming_q import (
+        q_stream_incremental_dedup,
+        q_stream_unique_users_append,
+    )
 
-    src = str(tmp_path / "events_src.parquet")
-    with open(src, "wb") as f:
-        f.write(b"PAR1fakebody")
-
-    d1 = _staged_dir(src, "t_reuse")
-    d2 = _staged_dir(src, "t_reuse")
-    assert d1 == d2
-    assert os.path.islink(os.path.join(d1, "part-00000.parquet"))
-    assert os.path.exists(os.path.join(d1, "_READY"))
-
-    stage_root = os.path.dirname(d1)
-    before = set(os.listdir(stage_root))
-
-    def boom(tmp_dir):
-        raise OSError("disk full")
-
-    try:
-        _staged_dir(src, "t_fail", build=boom)
-        raise AssertionError("build failure must propagate")
-    except OSError:
-        pass
-    after = set(os.listdir(stage_root))
-    assert after == before, f"failed build leaked staging dirs: {after - before}"
-
-    # in-place regeneration: new content identity -> new staging dir,
-    # and the SUPERSEDED generation is swept on publish (round-8 ADVICE:
-    # full-copy variants otherwise accrete one corpus copy per driver
-    # round) — generations are siblings under the per-(src,variant) dir
-    with open(src, "wb") as f:
-        f.write(b"PAR1regenerated-longer-body")
-    os.utime(src, (1, 1))  # force a distinct mtime_ns deterministically
-    d3 = _staged_dir(src, "t_reuse")
-    assert d3 != d1, "stale staging dir served after source regeneration"
-    assert os.path.exists(os.path.join(d3, "_READY"))
-    assert os.path.dirname(d3) == stage_root  # same (src, variant) parent
-    assert not os.path.exists(d1), "superseded generation not swept"
-
-    # the cache root is namespaced per uid and owned by us
-    root = os.path.dirname(stage_root)
-    assert root.endswith(f"_{os.getuid()}")
-    assert os.stat(root).st_uid == os.getuid()
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    for q in (q_stream_unique_users_append, q_stream_incremental_dedup):
+        first, second = (sorted(map(tuple, q(spark, SF_DIR).collect())) for _ in range(2))
+        assert first == second and first, q.__name__
+    assert set(os.listdir(tmp)) == before
